@@ -393,18 +393,11 @@ def ngram_jaccard_pairs(
 
 
 # universal-hash permutation schedule for MinHash: perm_i(h) =
-# (A_i·h + B_i) mod MERSENNE with A_i odd, both derived from i — fixed
-# and engine-portable. h is 28 bits (7 md5 hex chars), so A_i·h + B_i
-# stays far inside a signed 64-bit integer in every engine.
+# (A_i·h + B_i) mod MERSENNE with A_i = 2i + 1 (odd) and
+# B_i = 1 000 003·(i + 1) — fixed and engine-portable. h is 28 bits
+# (7 md5 hex chars), so A_i·h + B_i stays far inside a signed 64-bit
+# integer in every engine.
 MINHASH_MOD = 2_147_483_647  # 2^31 − 1 (Mersenne prime)
-
-
-def _perm_a(i: int) -> int:
-    return 2 * i + 1
-
-
-def _perm_b(i: int) -> int:
-    return 1_000_003 * (i + 1)
 
 
 def minhash_signatures(

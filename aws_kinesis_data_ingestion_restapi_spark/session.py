@@ -49,10 +49,7 @@ def get_spark(
         # A 64 KB floor keeps those stages parallel (measured 3× on
         # the n-gram similarity join); at production sizes partitions
         # are far above either floor, so this only affects the tails.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_FLOOR", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # FAIR scheduling between pools: a single job (every batch
         # query — there is only ever one pool active) schedules exactly
@@ -113,11 +110,8 @@ RUNTIME_CONFS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Keep compute-heavy, byte-small shuffle stages parallel (see the
     # builder comment in get_spark); runtime-settable, so harness
-    # sessions get it too. SPARK_GRAFT_AQE_FLOOR overrides for A/B
-    # benchmark attribution (e.g. "1m" = Spark's default).
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_AQE_FLOOR", "64k"
-    ),
+    # sessions get it too.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
 }
 
 
@@ -145,12 +139,7 @@ def spread_scan(df):
     aggregation, JSON/base64 codec, shingling). Catalyst still pushes
     filters and column pruning THROUGH the repartition, so the
     exchange carries only the columns and rows the query needs.
-
-    ``SPARK_GRAFT_NO_SPREAD=1`` disables the exchange — an A/B switch
-    for attributing its cost in benchmarks, not a production mode.
     """
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD") == "1":
-        return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(2, target // 4):

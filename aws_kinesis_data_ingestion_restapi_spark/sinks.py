@@ -31,13 +31,10 @@ from aws_kinesis_data_ingestion_restapi_spark.schema import TABLE_PARTITIONS
 SERVING_KEYS = ["customer_id", "order_id"]
 
 
-#: Columnar formats write_partitioned accepts — both built into Spark
-#: (no external jars), both footer-statistics formats so the pruning
-#: story (min/max row-group skipping, partition directories) is
-#: identical. Parquet is the default and the reference's format
-#: (Firehose parquet conversion, main.tf:654-719); ORC is the drop-in
-#: alternative for Hive-ecosystem consumers.
-COLUMNAR_FORMATS = ("parquet", "orc")
+#: Rows per output file: bounds file sizes like the Firehose 128 MB
+#: buffer (main.tf:668) bounds flush sizes — at 100 TB you want many
+#: right-sized files per partition, not one giant or thousands tiny.
+MAX_RECORDS_PER_FILE = 1_000_000
 
 
 def write_partitioned(
@@ -46,47 +43,28 @@ def write_partitioned(
     table: str | None = None,
     partition_cols: list[str] | None = None,
     mode: str = "append",
-    max_records_per_file: int = 1_000_000,
-    format: str = "parquet",
 ) -> None:
-    """K1+K2: partitioned Snappy columnar write (parquet by default,
-    ORC via ``format="orc"`` — same layout, same pruning semantics).
-
-    ``maxRecordsPerFile`` bounds file sizes like the Firehose 128 MB
-    buffer (main.tf:668) bounds flush sizes — at 100 TB you want many
-    right-sized files per partition, not one giant or thousands tiny.
-    """
-    if format not in COLUMNAR_FORMATS:
-        raise ValueError(
-            f"format={format!r} not supported; choose from {COLUMNAR_FORMATS}"
-        )
+    """K1+K2: partitioned Snappy Parquet write, the reference's format
+    (Firehose parquet conversion, main.tf:654-719). ``partition_cols``
+    defaults to ``table``'s layout in ``TABLE_PARTITIONS``."""
     if partition_cols is None and table is not None:
         partition_cols = TABLE_PARTITIONS.get(table, [])
-    writer = df.write.mode(mode).option("maxRecordsPerFile", max_records_per_file)
+    writer = df.write.mode(mode).option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
-    if format == "orc":
-        writer.option("compression", "snappy").orc(path)
-    else:
-        writer.parquet(path)
+    writer.parquet(path)
 
 
-def write_errors(
-    bad: DataFrame, base_path: str, batch_id: int | None = None
-) -> None:
+def write_errors(bad: DataFrame, base_path: str, batch_id: int) -> None:
     """E1: quarantine failed records under ``errors/`` (main.tf:676).
 
-    With ``batch_id`` the quarantine lands in a deterministic
-    ``bid={batch_id}`` partition dir in OVERWRITE mode — a replayed
-    micro-batch rewrites the same directory instead of appending
-    duplicates (the same exactly-once recipe as the table sinks;
-    streaming/pipeline.py). Without it (batch callers), plain append."""
-    if batch_id is None:
-        bad.write.mode("append").parquet(os.path.join(base_path, "errors"))
-    else:
-        bad.write.mode("overwrite").parquet(
-            os.path.join(base_path, "errors", f"bid={batch_id}")
-        )
+    The quarantine lands in a deterministic ``bid={batch_id}``
+    partition dir in OVERWRITE mode — a replayed micro-batch rewrites
+    the same directory instead of appending duplicates (the same
+    exactly-once recipe as the table sinks; streaming/pipeline.py)."""
+    bad.write.mode("overwrite").parquet(
+        os.path.join(base_path, "errors", f"bid={batch_id}")
+    )
 
 
 SERVING_N_BUCKETS = 16
@@ -134,47 +112,89 @@ def serving_upsert(
 
     Size ``n_buckets`` so a bucket ≈ one task's comfortable rewrite
     unit; at a larger store, raise it (resizing = one full rewrite, the
-    same migration path as the legacy flat layout below).
+    same migration path as the legacy flat layout).
     """
-    deduped = batch.dropDuplicates(SERVING_KEYS).withColumn(
-        "bucket", _bucket_expr(n_buckets)
-    )
-    staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
+    deduped = batch.dropDuplicates(SERVING_KEYS)
+    _merge_buckets(spark, store_path, deduped, deduped, n_buckets)
 
+
+def serving_apply_changes(
+    spark: SparkSession,
+    changes: DataFrame,
+    new_snapshot: DataFrame,
+    store_path: str,
+    n_buckets: int = SERVING_N_BUCKETS,
+) -> None:
+    """CDC APPLY: feed a keyed change feed — the exact output shape of
+    ``operators/cdc.snapshot_diff`` (key columns + ``change_type`` ∈
+    insert/update/delete) — into the bucketed serving store.
+    Inserts/updates take their payload rows from ``new_snapshot``
+    (snapshot_diff carries only keys + digests, by design — the shuffle
+    stays key-sized); deletes remove the key. Replaying the same feed
+    is a no-op (idempotent, like serving_upsert).
+
+    Scale shape is serving_upsert's: only the buckets touched by ANY
+    change are scanned (partition-pruned) and rewritten. A bucket
+    whose rows are all deleted is dropped from the store entirely.
+    """
+    keyed = changes.filter(
+        F.col("change_type").isin("insert", "update", "delete")
+    ).dropDuplicates(SERVING_KEYS)
+    ups = new_snapshot.join(
+        F.broadcast(
+            keyed.filter(F.col("change_type") != "delete").select(*SERVING_KEYS)
+        ),
+        SERVING_KEYS,
+    )
+    _merge_buckets(spark, store_path, keyed, ups, n_buckets)
+
+
+def _merge_buckets(
+    spark: SparkSession,
+    store_path: str,
+    drop_keys: DataFrame,
+    rows: DataFrame,
+    n_buckets: int,
+) -> None:
+    """The one bucket-merge both serving sinks share: every existing
+    row whose key is in ``drop_keys`` is removed and ``rows`` are
+    written in, rewriting only the buckets ``drop_keys`` touches.
+    Every key of ``rows`` must also be in ``drop_keys``."""
+    keys = drop_keys.select(*SERVING_KEYS)
+    rows = rows.withColumn("bucket", _bucket_expr(n_buckets))
     # crash recovery FIRST — before any existence check or read: a
     # prior run may have died inside a rename-aside window, leaving
     # the only copy of the store (or of a bucket) under an aside name
     _recover_debris(store_path)
+    # one staging name serves both rewrites: the migration's staging
+    # dir is renamed into the store before the merge writes its own
+    staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
 
     if not os.path.exists(store_path):
-        deduped.write.mode("overwrite").partitionBy("bucket").parquet(store_path)
+        rows.write.mode("overwrite").partitionBy("bucket").parquet(store_path)
         return
 
     if not _is_bucketed_layout(store_path):
-        # legacy flat store: one full merge-rewrite migrates it into the
-        # bucketed layout; every later upsert is partial.
-        existing = spark.read.parquet(store_path).withColumn(
+        # a flat store is either a legacy layout or one just restored
+        # by the migration-crash recovery above. Migrate it first (pure
+        # re-bucket, nothing fused in); the merge below is then partial.
+        flat = spark.read.parquet(store_path).withColumn(
             "bucket", _bucket_expr(n_buckets)
         )
-        survivors = existing.join(
-            F.broadcast(deduped.select(*SERVING_KEYS)), SERVING_KEYS, "left_anti"
-        )
-        merged = survivors.unionByName(deduped)
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+        flat.write.mode("overwrite").partitionBy("bucket").parquet(staging)
         _replace_store(staging, store_path)
-        return
 
     touched = sorted(
-        r[0] for r in deduped.select("bucket").distinct().collect()
+        r[0] for r in keys.select(_bucket_expr(n_buckets)).distinct().collect()
     )
+    if not touched:
+        return
     # partition-pruned scan: only the touched bucket dirs are read
-    existing = spark.read.parquet(store_path).filter(
-        F.col("bucket").isin(touched)
-    )
+    existing = spark.read.parquet(store_path).filter(F.col("bucket").isin(touched))
     survivors = existing.join(
-        F.broadcast(deduped.select(*SERVING_KEYS)), SERVING_KEYS, "left_anti"
+        F.broadcast(keys), SERVING_KEYS, "left_anti"
     ).withColumn("bucket", F.col("bucket").cast("int"))
-    merged = survivors.unionByName(deduped)
+    merged = survivors.unionByName(rows)
     merged.write.mode("overwrite").partitionBy("bucket").parquet(staging)
     _swap_buckets(staging, store_path, touched)
 
@@ -275,70 +295,3 @@ def _swap_buckets(staging: str, store_path: str, touched: list[int]) -> None:
         if had_old:
             shutil.rmtree(aside)
     shutil.rmtree(staging, ignore_errors=True)
-
-
-def serving_apply_changes(
-    spark: SparkSession,
-    changes: DataFrame,
-    new_snapshot: DataFrame,
-    store_path: str,
-    n_buckets: int = SERVING_N_BUCKETS,
-) -> None:
-    """CDC APPLY: feed a keyed change feed — the exact output shape of
-    ``operators/cdc.snapshot_diff`` (key columns + ``change_type`` ∈
-    insert/update/delete) — into the bucketed serving store.
-    Inserts/updates take their payload rows from ``new_snapshot``
-    (snapshot_diff carries only keys + digests, by design — the shuffle
-    stays key-sized); deletes remove the key. Replaying the same feed
-    is a no-op (idempotent, like serving_upsert).
-
-    Scale shape mirrors serving_upsert: only the buckets touched by
-    ANY change are scanned (partition-pruned) and rewritten; the
-    touched-bucket list is bounded by ``n_buckets``. A bucket whose
-    rows are all deleted is dropped from the store entirely.
-    """
-    keyed = changes.filter(
-        F.col("change_type").isin("insert", "update", "delete")
-    ).dropDuplicates(SERVING_KEYS)
-    ups = new_snapshot.join(
-        F.broadcast(
-            keyed.filter(F.col("change_type") != "delete").select(*SERVING_KEYS)
-        ),
-        SERVING_KEYS,
-    ).withColumn("bucket", _bucket_expr(n_buckets))
-    all_keys = keyed.select(*SERVING_KEYS).withColumn(
-        "bucket", _bucket_expr(n_buckets)
-    )
-
-    # same crash recovery as serving_upsert, before any read
-    _recover_debris(store_path)
-
-    if not os.path.exists(store_path):
-        ups.write.mode("overwrite").partitionBy("bucket").parquet(store_path)
-        return
-
-    if not _is_bucketed_layout(store_path):
-        # a flat store can reach this path two ways: a legacy layout
-        # never upserted against, or a migration-crash restore by
-        # _recover_debris just above. Either way the bucketed read
-        # below would fail on the missing 'bucket' column — migrate
-        # first (pure re-bucket, no batch fused in), then apply the
-        # change feed through the normal partial path.
-        flat = spark.read.parquet(store_path).withColumn(
-            "bucket", _bucket_expr(n_buckets)
-        )
-        staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
-        flat.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        _replace_store(staging, store_path)
-
-    touched = sorted(r[0] for r in all_keys.select("bucket").distinct().collect())
-    if not touched:
-        return
-    existing = spark.read.parquet(store_path).filter(F.col("bucket").isin(touched))
-    survivors = existing.join(
-        F.broadcast(all_keys.select(*SERVING_KEYS)), SERVING_KEYS, "left_anti"
-    ).withColumn("bucket", F.col("bucket").cast("int"))
-    merged = survivors.unionByName(ups)
-    staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    _swap_buckets(staging, store_path, touched)

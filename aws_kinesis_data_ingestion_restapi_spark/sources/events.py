@@ -11,21 +11,20 @@ Malformed payloads do NOT kill the query: ``from_json`` is PERMISSIVE
 bad records divert to an ``errors/`` prefix (terraform/main.tf:676)
 rather than failing the pipeline. Use ``split_corrupt`` to route them.
 
-In production the source would be the Kinesis connector
-(``spark.readStream.format("aws-kinesis")``) or Kafka — a config swap;
-the decode below is source-agnostic because it operates on the payload
-column.
+The decode is source-agnostic because it operates on the ``Data``
+payload column; wiring a production Kinesis or Kafka connector in front
+of it is ROADMAP direction 4.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_kinesis_data_ingestion_restapi_spark.schema import ENVELOPE_SCHEMA, ORDER_EVENT_SCHEMA
 
 
-def decode_envelope(envelopes: DataFrame, data_col: str = "Data") -> DataFrame:
+def decode_envelope(envelopes: DataFrame) -> DataFrame:
     """Decode ``{StreamName, PartitionKey, Data(b64 JSON)}`` rows into
     typed order-event rows (SURVEY §2 S4).
 
@@ -35,7 +34,7 @@ def decode_envelope(envelopes: DataFrame, data_col: str = "Data") -> DataFrame:
     # try_to_binary (not unbase64): under ANSI semantics unbase64 THROWS
     # on malformed base64, which would let one bad record kill the
     # stream; try_to_binary yields NULL, which split_corrupt quarantines.
-    raw = F.try_to_binary(F.col(data_col), F.lit("base64")).cast("string")
+    raw = F.try_to_binary(F.col("Data"), F.lit("base64")).cast("string")
     parsed = F.from_json(raw, ORDER_EVENT_SCHEMA)
     # _raw falls back to the ORIGINAL transport payload when the
     # base64 decode itself failed — a NULL _raw would quarantine a
@@ -43,17 +42,22 @@ def decode_envelope(envelopes: DataFrame, data_col: str = "Data") -> DataFrame:
     # the errors/ prefix exists to keep
     return envelopes.select(
         parsed.alias("event"),
-        F.coalesce(raw, F.col(data_col)).alias("_raw"),
+        F.coalesce(raw, F.col("Data")).alias("_raw"),
     ).select("event.*", "_raw")
 
 
+def is_corrupt() -> Column:
+    """The corrupt-record test on decoded events: JSON parsing failed
+    entirely or a required key field is missing (the reference's
+    Lambdas would KeyError → Firehose error prefix)."""
+    return F.col("order_id").isNull() | F.col("customer_id").isNull()
+
+
 def split_corrupt(decoded: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split decoded events into (good, corrupt) — the error-quarantine
-    contract (SURVEY §2 E1). A record is corrupt when JSON parsing
-    failed entirely or the required key fields are missing (the
-    reference's Lambdas would KeyError → Firehose error prefix).
+    """Split decoded events into (good, corrupt) by :func:`is_corrupt`
+    — the error-quarantine contract (SURVEY §2 E1).
     """
-    is_bad = F.col("order_id").isNull() | F.col("customer_id").isNull()
+    is_bad = is_corrupt()
     good = decoded.filter(~is_bad).drop("_raw")
     bad = decoded.filter(is_bad).select(
         F.col("_raw").alias("raw_payload"),
@@ -81,57 +85,6 @@ def read_envelope_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return decode_envelope(reader.json(path))
-
-
-def read_kinesis_stream(
-    spark: SparkSession,
-    stream_name: str,
-    region: str = "us-east-1",
-    endpoint_url: str | None = None,
-    starting_position: str = "LATEST",
-    max_fetch_rate_per_shard_mb: int | None = None,
-    connector_format: str = "aws-kinesis",
-) -> DataFrame:
-    """Production source: the reference's Kinesis stream (ON_DEMAND,
-    terraform/main.tf:18-30) read via the Spark Kinesis connector
-    (``spark-sql-kinesis-connector``; format name ``aws-kinesis``).
-
-    The connector's output rows carry the record payload in a binary
-    ``data`` column; the producer's envelope puts base64 JSON there
-    (python_post_producer/python_producer.py:100-108, API Gateway maps
-    Data 1:1 — terraform/main.tf:109-118), so ``data`` cast to string
-    IS the envelope's ``Data`` field and the shared ``decode_envelope``
-    path applies unchanged.
-
-    ``starting_position="LATEST"`` mirrors the reference's consumer
-    (terraform/main.tf:274); micro-batch sizing maps to the connector's
-    fetch-rate options (the batch_size/window knobs, main.tf:275-276).
-    The connector jar is NOT bundled in this environment — tests use
-    ``read_envelope_stream``; this function is the documented config
-    swap and fails at ``.load()`` if the jar is absent.
-    """
-    reader = (
-        spark.readStream.format(connector_format)
-        .option("streamName", stream_name)
-        .option("region", region)
-        .option("startingposition", starting_position)
-    )
-    if endpoint_url is not None:
-        reader = reader.option("endpointUrl", endpoint_url)
-    if max_fetch_rate_per_shard_mb is not None:
-        reader = reader.option(
-            "kinesis.executor.maxFetchRateInMbPerShard",
-            str(max_fetch_rate_per_shard_mb),
-        )
-    records = reader.load()
-    envelopes = records.select(
-        F.lit(stream_name).alias("StreamName"),
-        F.col("partitionKey").alias("PartitionKey"),
-        # connector delivers raw bytes; the producer's payload is the
-        # base64 text, so a plain string cast recovers the Data field
-        F.col("data").cast("string").alias("Data"),
-    )
-    return decode_envelope(envelopes)
 
 
 def rate_envelope_stream(

@@ -23,25 +23,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
+from aws_kinesis_data_ingestion_restapi_spark.sources.events import is_corrupt
+
 log = logging.getLogger(__name__)
 
 #: Name under which the audit observation appears in observedMetrics.
 AUDIT_OBSERVATION = "ingest_audit"
 
 
-def with_audit_metrics(decoded: DataFrame, name: str = AUDIT_OBSERVATION) -> DataFrame:
+def with_audit_metrics(decoded: DataFrame) -> DataFrame:
     """Attach record/corrupt counters to a decoded-envelope DataFrame.
 
-    Uses the same corruptness predicate as ``split_corrupt`` (missing
-    key fields after PERMISSIVE parse), so ``n_failed`` equals the rows
-    the pipeline quarantines and ``n_records - n_failed`` equals the
-    rows that reach the warehouse tables.
+    Uses ``split_corrupt``'s own predicate (``sources.events.is_corrupt``),
+    so ``n_failed`` equals the rows the pipeline quarantines and
+    ``n_records - n_failed`` equals the rows that reach the warehouse
+    tables.
     """
-    is_bad = F.col("order_id").isNull() | F.col("customer_id").isNull()
     return decoded.observe(
-        name,
+        AUDIT_OBSERVATION,
         F.count(F.lit(1)).alias("n_records"),
-        F.coalesce(F.sum(is_bad.cast("long")), F.lit(0)).alias("n_failed"),
+        F.coalesce(F.sum(is_corrupt().cast("long")), F.lit(0)).alias("n_failed"),
     )
 
 
@@ -54,8 +55,7 @@ class AuditListener(StreamingQueryListener):
     with ``removeListener`` — listeners are session-global).
     """
 
-    def __init__(self, metric_name: str = AUDIT_OBSERVATION) -> None:
-        self.metric_name = metric_name
+    def __init__(self) -> None:
         self.records: list[dict[str, Any]] = []
 
     # -- StreamingQueryListener interface ---------------------------------
@@ -65,7 +65,7 @@ class AuditListener(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:  # noqa: N802
         progress = event.progress
         observed = progress.observedMetrics or {}
-        row = observed.get(self.metric_name)
+        row = observed.get(AUDIT_OBSERVATION)
         if row is None:
             return
         entry = {"batch_id": progress.batchId, **row.asDict()}

@@ -156,7 +156,6 @@ class IngestionPipeline:
         decoded_stream: DataFrame,
         checkpoint: str,
         trigger: dict | None = None,
-        audit: bool = True,
     ) -> StreamingQuery:
         """Attach the pipeline to a decoded-envelope streaming DataFrame.
 
@@ -165,14 +164,13 @@ class IngestionPipeline:
         batching knobs (main.tf:275-276); ``{"availableNow": True}``
         drains the backlog and stops (used by tests/backfills).
 
-        ``audit=True`` (default) attaches the T11 per-batch record
-        counters via ``observe()`` — free (no extra pass); read them
-        with an ``observability.AuditListener``.
+        The T11 per-batch record counters are always attached via
+        ``observe()`` — free (no extra pass); read them with an
+        ``observability.AuditListener``.
         """
-        if audit:
-            decoded_stream = with_audit_metrics(decoded_stream)
         writer = (
-            decoded_stream.writeStream.foreachBatch(self.process_batch)
+            with_audit_metrics(decoded_stream)
+            .writeStream.foreachBatch(self.process_batch)
             .option("checkpointLocation", checkpoint)
             .outputMode("update")
         )

@@ -34,35 +34,13 @@ REGISTRY = os.path.join(
 )
 WINDOW = 50
 
-#: Round-13 rotation set: every query whose IMPLEMENTATION changed
-#: this round (outputs bit-identical, re-proven vs the oracle at
-#: sf0.001/sf0.01 — see OPTIMIZATION_r13.md). Zero new operators this
-#: round (surface frozen per VERDICT r12 item 8).
+#: Round-14 rotation set: every query whose IMPLEMENTATION changed
+#: this round (outputs unchanged, re-proven vs the oracle at sf0.01).
+#: The ingest-layer simplification edited write_partitioned (format
+#: knob and ORC branch removed) and decode_envelope (data_col removed).
 MUST_ROTATE = [
-    # shuffle-free top-token fold (guide §2.4)
-    "text_repetition",
-    # data-derived state-partition sizing (guide §2/§5) — all 15
-    # stateful drains start with ceil(feed_bytes/4MiB) state partitions
-    "streaming_payment_match",
-    "streaming_payment_match_outer",
-    "streaming_payment_match_full",
-    "streaming_topk_users",
-    "streaming_running_totals_final",
-    "streaming_dedup_replay",
-    "streaming_hll_users",
-    "streaming_sliding_1h_15m",
-    "streaming_session_windows",
-    "streaming_late_data_policy",
-    "streaming_value_quantiles",
-    "streaming_cusum_gate",
-    "streaming_user_anomalies",
-    "streaming_drift_tvd",
-    "streaming_enriched_nation_totals",
-    # concurrent ANN audit-panel builds (guide §2.6; plans unchanged)
-    "ann_recall_audit",
-    "ann_recall_clustered",
-    "ann_label_audit",
-    "ann_label_audit_clustered",
+    "pipeline_partition_scan",
+    "pipeline_envelope_decode",
 ]
 
 

@@ -12,6 +12,7 @@ import glob
 import hashlib
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from aws_kinesis_data_ingestion_restapi_spark.sinks import (
@@ -110,6 +111,40 @@ def _snap(spark, rows):
     return spark.createDataFrame(
         rows, "customer_id string, order_id string, amount double"
     )
+
+
+def _empty_upsert(spark, store):
+    serving_upsert(spark, _rows(spark, [], "x"), store, n_buckets=N_BUCKETS)
+
+
+def _empty_apply_changes(spark, store):
+    from aws_kinesis_data_ingestion_restapi_spark.sinks import serving_apply_changes
+
+    changes = spark.createDataFrame(
+        [], "customer_id string, order_id string, change_type string"
+    )
+    serving_apply_changes(
+        spark, changes, _rows(spark, [], "x"), store, n_buckets=N_BUCKETS
+    )
+
+
+@pytest.mark.parametrize(
+    "apply_empty",
+    [_empty_upsert, _empty_apply_changes],
+    ids=["serving_upsert", "serving_apply_changes"],
+)
+def test_empty_input_leaves_store_byte_identical(spark, tmp_path, apply_empty):
+    """An empty upsert batch or an empty change feed touches no bucket,
+    so every store file stays byte-identical."""
+    store = str(tmp_path / "serving")
+    keys = [(f"c{i}", f"o{i}") for i in range(40)]
+    serving_upsert(spark, _rows(spark, keys, "pending"), store, n_buckets=N_BUCKETS)
+    before = _file_hashes(store)
+    assert before
+
+    apply_empty(spark, store)
+    assert _file_hashes(store) == before
+    assert spark.read.parquet(store).count() == len(keys)
 
 
 def test_apply_changes_roundtrips_snapshot_diff(spark, tmp_path):
@@ -369,38 +404,3 @@ def test_write_errors_batch_mode_empty_and_replay(spark, tmp_path):
     out = spark.read.parquet(os.path.join(base, "errors"))
     assert out.count() == 2
     assert sorted(r["bid"] for r in out.select("bid").collect()) == [1, 1]
-
-
-def test_write_partitioned_orc_round_trip(spark, tmp_path):
-    """format="orc" writes the same Hive layout with the same
-    values — ORC is the built-in columnar alternative for
-    Hive-ecosystem consumers; partition-directory pruning and footer
-    statistics work the same way. Bad format names fail loudly."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from aws_kinesis_data_ingestion_restapi_spark.sinks import write_partitioned
-
-    df = spark.createDataFrame(
-        [(f"o{i:05d}", ["ES", "US"][i % 2], 10.0 * i) for i in range(20)],
-        ["order_id", "country", "amount"],
-    )
-    p = str(tmp_path / "orc_out")
-    write_partitioned(
-        df, p, partition_cols=["country"], mode="overwrite", format="orc"
-    )
-    back = spark.read.orc(p)
-    assert back.count() == 20
-    assert set(back.columns) == {"order_id", "country", "amount"}
-    # partition pruning works on the ORC layout too
-    es = back.filter(F.col("country") == "ES")
-    assert es.count() == 10
-    # directory-level pruning reaches the ORC scan (inputFiles() does
-    # not reflect runtime pruning on this read path — assert the plan)
-    from aws_kinesis_data_ingestion_restapi_spark.plans import (
-        has_partition_filters,
-    )
-
-    assert has_partition_filters(es, "country")
-    with pytest.raises(ValueError, match="not supported"):
-        write_partitioned(df, p, format="avro")

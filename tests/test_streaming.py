@@ -94,7 +94,18 @@ def test_audit_metrics_per_batch(spark, stream_dirs):
 
     d = stream_dirs
     recs = envelope_records(n=30, seed=11)
-    corrupt = [{"StreamName": "s", "PartitionKey": "p", "Data": "%%%bad%%%"}]
+    # valid base64 JSON that parses but lacks a required key field
+    event = json.loads(base64.b64decode(recs[0]["Data"]))
+    event["order_id"] = "o-no-customer"
+    del event["customer_id"]
+    corrupt = [
+        {"StreamName": "s", "PartitionKey": "p", "Data": "%%%bad%%%"},
+        {
+            "StreamName": "s",
+            "PartitionKey": "p",
+            "Data": base64.b64encode(json.dumps(event).encode()).decode(),
+        },
+    ]
     _write_ndjson(os.path.join(d["input"], "b0.json"), recs[:20] + corrupt)
     _write_ndjson(os.path.join(d["input"], "b1.json"), recs[20:])
 
@@ -103,13 +114,16 @@ def test_audit_metrics_per_batch(spark, stream_dirs):
     try:
         _run(spark, d)
         # progress events are delivered async, after query termination
-        assert listener.wait_for(31), f"metrics incomplete: {listener.records}"
+        assert listener.wait_for(32), f"metrics incomplete: {listener.records}"
     finally:
         spark.streams.removeListener(listener)
 
     assert listener.records, "no observed metrics reached the listener"
-    assert listener.total_records == 31
-    assert listener.total_failed == 1
+    assert listener.total_records == 32
+    assert listener.total_failed == 2
+    # the audit counter and the quarantine apply the same corrupt test
+    quarantined = spark.read.parquet(f"{d['errors']}/errors").count()
+    assert listener.total_failed == quarantined
     for entry in listener.records:
         assert set(entry) >= {"batch_id", "n_records", "n_failed"}
 
